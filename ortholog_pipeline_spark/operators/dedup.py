@@ -110,12 +110,6 @@ def minhash_params(num_hashes: int) -> list[tuple[int, int]]:
     ]
 
 
-def shingle_hash31(shingles: Column) -> Column:
-    """31-bit integer hash per shingle — the ONE md5 pass; everything downstream is
-    integer arithmetic."""
-    return F.transform(shingles, lambda s: F.pmod(hex_hash64(s), F.lit(MINHASH_M31)))
-
-
 #: Polynomial combine constants for hashed k-grams (products stay < 2^52).
 SHINGLE_A = 1000003
 SHINGLE_B = 1009
@@ -202,24 +196,6 @@ def repeated_spans(
             F.min(id_col).alias("first_doc"),
         )
         .filter(F.col("n_docs") >= 2)
-    )
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature via single-md5 + affine rehash: sig[h] = min over shingles of
-    (A_h·hash31(s) + B_h) mod P. Pure array expressions — computed map-side, and ~16×
-    cheaper than md5-per-(h, shingle)."""
-    h31 = shingle_hash31(shingles)
-
-    def affine(a: int, b: int):
-        # closure factory: PySpark counts lambda default-args as lambda params
-        return lambda x: F.pmod(F.lit(a) * x + F.lit(b), F.lit(MINHASH_P))
-
-    return F.array(
-        *[
-            F.array_min(F.transform(h31, affine(a, b)))
-            for a, b in minhash_params(num_hashes)
-        ]
     )
 
 

@@ -14,10 +14,14 @@ Layout:  <root>/<table>/v=<n>/  (parquet), with <root>/<table>/_CURRENT holding 
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import time
+from concurrent.futures import Future, ThreadPoolExecutor
+from typing import Any, Callable, Iterator
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -163,6 +167,12 @@ class StateStore:
     #   commit_run({t: v}) → manifest atomically flipped to COMMITTED (THE
     #                        commit point), then every _CURRENT advanced in
     #                        sorted order, then the manifest removed
+    # Flows never call these three directly: `with store.run(tables) as run:`
+    # begins the run, `run.stage(table, ...)` stages a table and
+    # `run.submit(fn)` overlaps any other work, both on pool threads that
+    # carry the caller's Spark job group. Exit joins EVERY future first — an
+    # abort never races an in-flight staging writer — then commits the staged
+    # versions, or aborts and re-raises the first error.
     # Recovery (lazy, on any read through a fresh store): a PREPARED manifest
     # from a dead run rolls BACK (staged dirs above the published markers are
     # deleted); a COMMITTED manifest rolls FORWARD (remaining markers
@@ -291,8 +301,6 @@ class StateStore:
         alive (e.g. a wedged writer on another host that a human has verified
         dead) — the destructive override, never taken implicitly. Returns
         True iff a manifest was resolved."""
-        import contextlib
-
         p = self._pending_path
         if not os.path.exists(p):
             return False
@@ -319,8 +327,6 @@ class StateStore:
         No-op while the owning run is still alive — in this process (the
         store object that began it), or in another live process on this host
         (pid + start-time match), or on another host (unverifiable)."""
-        import contextlib
-
         p = self._pending_path
         # no exists() pre-check here and FileNotFoundError suppressed below:
         # two readers can both pass the dead-owner check concurrently, and the
@@ -345,7 +351,6 @@ class StateStore:
                 if v is not None and self._raw_current(table) < v:
                     self._publish(table, v)
         else:  # PREPARED — the run never reached its commit point
-            import contextlib
             import shutil
 
             for table in m["tables"]:
@@ -477,6 +482,21 @@ class StateStore:
         self._active_run = None
         _LIVE_RUNS.pop(os.path.abspath(self.root), None)
         self._recover()  # PREPARED → rolls back; COMMITTED → rolls forward
+
+    @contextlib.contextmanager
+    def run(self, tables: list[str]) -> Iterator[StagedRun]:
+        """The run-grain transaction as a scope (protocol above)."""
+        self.begin_run(tables)
+        run = StagedRun(self)
+        try:
+            with run._pool:  # exit joins every future, on success or error
+                yield run
+            for fut in run._futures:
+                fut.result()
+            self.commit_run(run.versions)
+        except BaseException:
+            self.abort_run()
+            raise
 
     def _publish(self, table: str, version: int) -> None:
         marker = os.path.join(self._table_dir(table), "_CURRENT")
@@ -749,6 +769,37 @@ class StateStore:
             else:
                 nxt = nxt.unionByName(inserts.select(*nxt.columns))
         return self.write(table, nxt, partition_by=partition_by, publish=publish)
+
+
+class StagedRun:
+    """The handle `StateStore.run` yields: concurrent thunks and the versions
+    staged so far."""
+
+    def __init__(self, store: StateStore):
+        self._store = store
+        self._pool = ThreadPoolExecutor(thread_name_prefix="state-run")
+        self._futures: list[Future] = []
+        self.versions: dict[str, int] = {}
+
+    def submit(self, fn: Callable[[], Any]) -> Future:
+        """Run ``fn`` concurrently; its Spark jobs land in the caller's job
+        group (pool threads do not inherit it on their own)."""
+        fut = self._pool.submit(inheritable_thread_target(self._store.spark)(fn))
+        self._futures.append(fut)
+        return fut
+
+    def stage(self, table: str, **apply_changes_kwargs: Any) -> Future:
+        """Stage ``table``'s next version (`apply_changes(..., publish=False)`)
+        concurrently; the future yields the version, which exit commits."""
+
+        def _stage() -> int:
+            v = self._store.apply_changes(
+                table, publish=False, **apply_changes_kwargs
+            )
+            self.versions[table] = v
+            return v
+
+        return self.submit(_stage)
 
 
 def next_surrogate_keys(

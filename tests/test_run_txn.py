@@ -14,8 +14,12 @@ OrthologRelationLoader.java:599-672 at run grain (SURVEY §1.4).
 
 from __future__ import annotations
 
+import ast
 import json
 import os
+import pathlib
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -230,6 +234,130 @@ def test_agr_load_crash_rolls_back_mints(spark, tmp_path, monkeypatch):
     res = run_agr_load(store, _agr_lines(spark), RUN_TS, delete_threshold_pct=100.0)
     assert res.unresolved.count() == 0
     assert store.read("xrefs").filter(F.col("acc_id") == "FB:F1").count() == 1
+
+
+MINT_TABLES = ("genes", "rgd_ids", "xrefs")
+
+
+def _staged_dirs(store, table):
+    """Version dirs above the published marker — staged, never committed."""
+    cur = store.current_version(table)
+    return [
+        d
+        for d in os.listdir(os.path.join(store.root, table))
+        if d.startswith("v=") and int(d.split("=", 1)[1]) > cur
+    ]
+
+
+def test_agr_abort_joins_inflight_mint_writers(spark, tmp_path, monkeypatch):
+    """A failure raised while the three mint writers are still staging must
+    not abort around them: the run joins every writer first, so none is
+    left running, none leaves an orphaned version dir above _CURRENT, and
+    the store stays usable (an orphaned v=1 made every later AGR run fail in
+    _append_version)."""
+    from ortholog_pipeline_spark.plans import agr_load
+
+    store = _seed_store(spark, tmp_path / "agrrace")
+    before_v = {t: store.current_version(t) for t in MINT_TABLES}
+    real_ac = StateStore.apply_changes
+
+    def slow_mint(self, table, *args, **kwargs):
+        if table in MINT_TABLES:
+            time.sleep(3)
+        return real_ac(self, table, *args, **kwargs)
+
+    def exploding_sync(*args, **kwargs):
+        raise RuntimeError("injected failure while mints stage")
+
+    monkeypatch.setattr(StateStore, "apply_changes", slow_mint)
+    monkeypatch.setattr(agr_load.sync, "sync_full_outer", exploding_sync)
+    threads_before = set(threading.enumerate())
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_agr_load(store, _agr_lines(spark), RUN_TS, delete_threshold_pct=100.0)
+    leaked = [
+        t
+        for t in threading.enumerate()
+        if t not in threads_before and not t.daemon
+    ]
+    assert not leaked, leaked
+    monkeypatch.undo()
+
+    for table in MINT_TABLES:
+        assert store.current_version(table) == before_v[table], table
+        assert _staged_dirs(store, table) == [], table
+    assert not os.path.exists(store._pending_path)
+
+    res = run_agr_load(store, _agr_lines(spark), RUN_TS, delete_threshold_pct=100.0)
+    assert res.unresolved.count() == 0
+    assert store.read("xrefs").filter(F.col("acc_id") == "FB:F1").count() == 1
+
+
+def test_run_scope_joins_slow_stage_and_reraises_first_error(
+    spark, tmp_path, monkeypatch
+):
+    """`StateStore.run` exit waits for every staged writer, re-raises the
+    first error, and leaves the before-state with no staged residue."""
+    store = _two_table_store(spark, tmp_path)
+    real_ac = StateStore.apply_changes
+    finished = []
+
+    def apply(self, table, *args, **kwargs):
+        if table == "t1":
+            raise OSError("injected t1 staging failure")
+        time.sleep(3)
+        v = real_ac(self, table, *args, **kwargs)
+        finished.append(table)
+        return v
+
+    monkeypatch.setattr(StateStore, "apply_changes", apply)
+    new = spark.createDataFrame([(2, "b")], "k int, v string")
+    with pytest.raises(OSError, match="injected t1"):
+        with store.run(["t1", "t2"]) as run:
+            run.stage("t1", inserts=new)
+            run.stage("t2", inserts=new)
+    assert finished == ["t2"]  # the slow stage completed before exit
+    monkeypatch.undo()
+
+    assert _rows(store, "t1") == [(1, "a")]
+    assert _rows(store, "t2") == [(1, "x")]
+    for table in ("t1", "t2"):
+        assert store.current_version(table) == 0, table
+        assert _staged_dirs(store, table) == [], table
+    assert not os.path.exists(store._pending_path)
+
+
+def test_run_scope_submit_carries_caller_job_group(spark, tmp_path):
+    store = _two_table_store(spark, tmp_path)
+    sc = spark.sparkContext
+    sc.setJobGroup("run_scope_group", "inheritance pin")
+    try:
+        with store.run(["t1"]) as run:
+            run.submit(lambda: spark.range(10).count()).result()
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("run_scope_group")
+
+
+def test_plans_import_no_thread_primitives():
+    """Flows overlap and stage through `StateStore.run` only: no module under
+    plans/ may import concurrent.futures or threading."""
+    import ortholog_pipeline_spark.plans as plans_pkg
+
+    offenders = []
+    for path in sorted(pathlib.Path(plans_pkg.__file__).parent.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Import):
+                modules = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                modules = [node.module or ""]
+            else:
+                continue
+            offenders += [
+                f"{path.name}:{node.lineno} {m}"
+                for m in modules
+                if m.split(".")[0] in ("concurrent", "threading")
+            ]
+    assert not offenders, offenders
 
 
 # ---------------------------------------------------------------------------
